@@ -88,9 +88,11 @@ object Bench {
         infos.map(i => i.memSize + i.diskSize).sum / 1e6)
     }
     // optional comma-separated subset for targeted perf iteration
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // (an unknown name fails the run instead of silently timing fewer gates)
+    val registry = graft.gates.GateRegistry.all
+    val results = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(registry.gates)(o => registry.select(o.split(',').toSeq))
+      .map(g => (g.name, g.run)).sortBy(_._1)
       .map { case (name, fn) =>
       val times = Seq.newBuilder[Double]
       var ok = true

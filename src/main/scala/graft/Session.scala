@@ -15,9 +15,9 @@ import graft.model.EngineConfig
   *   to read; [[graft.sources.Tables.normalizeEventTs]] absorbs that and the
   *   micros-NTZ / micros-UTC encodings, always surfacing TimestampType.
   * - UTC session timezone: required for DuckDB-oracle parity.
-  * - Shuffle partitions sized to the local core count, not the 200 default:
-  *   on a real cluster this would instead be tuned to ~2-3x total cores /
-  *   left to AQE coalescing, which is enabled.
+  * - Shuffle partitions start at the local core count, not the 200
+  *   default, and AQE then coalesces them by bytes (see the advisory
+  *   partition size below), so task counts follow data size, not cores.
   * - `spark.task.maxFailures`: the reference's ETL_MAX_RETRIES knob
   *   (/root/reference/etl/etl_ida.py:80) mapped to its Spark analog — the
   *   reference retries a failed resource download N times; Spark retries a

@@ -14,16 +14,17 @@ object Verify {
     // optional comma-separated subset for fast single-query iteration;
     // oracle_sql.json is always written in full so a partial dump never
     // masquerades as a full correctness run (check.py flags the missing
-    // result dirs instead of silently passing)
-    val only = args.lift(2).map(_.split(',').toSet)
+    // result dirs instead of silently passing); an unknown name fails
+    // before any work instead of being dropped
+    val registry = graft.gates.GateRegistry.all
+    val gates = args.lift(2).fold(registry.gates)(o => registry.select(o.split(',').toSeq))
     val spark = Session.build(appName = "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    gates.foreach { g =>
+      val name = g.name
       System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -29,8 +29,7 @@ object TextFns {
   def bpeishCount(c: Column): Column =
     sizeOrNull(regexp_extract_all(lower(c), lit(bpePattern), lit(0)))
 
-  /** Quality-scoring signals (length / punctuation / stopword / diversity
-    * ratios) used to filter low-quality documents. Single-char class counts
+  /** Punctuation count, a quality-scoring signal. Single-char class counts
     * use the length-difference form: `regexp_extract_all` materializes an
     * array element per match (an allocation per punctuation character —
     * megabytes of boxed strings on a long document), while replace-and-
@@ -39,11 +38,6 @@ object TextFns {
   private def charClassCount(c: Column, singleCharClass: String): Column =
     length(c) - length(regexp_replace(c, singleCharClass, ""))
   def punctCount(c: Column): Column = charClassCount(lower(c), "[^a-z0-9\\s]")
-  def digitCount(c: Column): Column = charClassCount(c, "[0-9]")
-  def uniqueTokenRatio(c: Column): Column =
-    sizeOrNull(array_distinct(tokens(c))).cast(DoubleType) / tokenCount(c)
-  def meanTokenLen(c: Column): Column =
-    length(regexp_replace(trim(c), "\\s+", "")).cast(DoubleType) / tokenCount(c)
 
   /** Stopword tables for the language-ID heuristic (top function words). */
   val stopwords: Map[String, Seq[String]] = Map(
@@ -72,9 +66,6 @@ object TextFns {
     * without re-tokenizing the document. */
   def stopwordCountFromHits(hits: Column, lang: String): Column =
     sizeOrNull(filter(hits, x => x.isin(stopwords(lang): _*)))
-
-  def stopwordRatio(c: Column, lang: String = "en"): Column =
-    stopwordCount(c, lang).cast(DoubleType) / tokenCount(c)
 
   private val langIdLangs = Seq("en", "de", "fr", "es")
 

@@ -13,8 +13,6 @@ object VectorFns {
   /** Elementwise dot product (native expression — single JVM loop/row). */
   def dot(a: Column, b: Column): Column = VectorExprs.dotProduct(a, b)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity; NULL when either vector has zero norm. */
   def cosine(a: Column, b: Column): Column = VectorExprs.cosineSim(a, b)
 

@@ -73,7 +73,7 @@ object Multimodal {
     * enforced is gone — and rather than trust that silently, staging
     * APPLIES multi-byte text to ids 3/64/125 on every run, keeping the
     * byte-vs-character divergence permanently exercised on both engines.
-    * The SQL mirror is `SparkEntry.fixtureTextSql`. */
+    * The SQL mirror is `graft.gates.MultimodalGates.fixtureTextSql`. */
   val NonAsciiSuffix = "é°漢"
 
   /** The staged-fixture text for a document: the raw text, with

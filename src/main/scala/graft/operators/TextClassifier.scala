@@ -225,8 +225,8 @@ object TextClassifier {
 
   /** The trained full-precision weights as plain values — bucket-bounded
     * metadata (≤ corpus vocab buckets), the form a caller memoizes so the
-    * model trains ONCE and serves many times (the pcaFitCache
-    * discipline). */
+    * model trains ONCE and serves many times (the pcaFit
+    * artifact discipline). */
   def trainWeightValues(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text", labelCol: String = "lang",
                         positive: String = "en", buckets: Int = 4096,

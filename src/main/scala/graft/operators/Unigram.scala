@@ -209,7 +209,7 @@ object Unigram {
     * [[tokenCounts]] (which applies the trained tokenizer to documents).
     *
     * Memoized PER DATASET (keyed by the canonicalized logical plan of the
-    * input plus the fit parameters — the classifierWeightsCache-per-dir
+    * input plus the fit parameters — the trainedClassifierWeights-per-dir
     * discipline): training is deterministic, so the fitted model is
     * value-identical on every call, and a bench sweep that scores the
     * same corpus repeatedly re-runs only the serving join, never the EM

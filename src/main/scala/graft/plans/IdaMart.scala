@@ -260,15 +260,17 @@ object IdaMart {
     batch.dropDuplicates("hash_registro")
       .join(existing.select(col("hash_registro")), Seq("hash_registro"), "left_anti")
 
-  /** Read the fact store, or None when it does not exist yet. ONLY a
-    * missing path means "first load"; any other read failure propagates —
-    * treating an IO error as an empty store would skip the idempotency
-    * anti-join and append replayed duplicates. Single definition shared by
-    * the batch pipeline and the streaming ingest. */
-  def readStoreIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" => None
-    }
+  /** Read a parquet store, or None when it does not exist yet. ONLY a
+    * missing path means "first load", and that is decided by an existence
+    * check, not by a caught read failure; any read failure of an existing
+    * path (an empty directory, an IO error) propagates — treating it as an
+    * empty store would skip the idempotency anti-join and append replayed
+    * duplicates. Single definition shared by the batch pipeline, the
+    * streaming ingest and the materialized view. */
+  def readStoreIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(spark.read.parquet(path))
+    else None
+  }
 }

@@ -71,4 +71,16 @@ class IdaMartSpec extends SparkSpec {
     assert(!Probe.isMonthColumn("2017-13"))
     assert(!Probe.isMonthColumn("GRUPO"))
   }
+
+  test("readStoreIfExists: a missing path is a first load, an empty store still throws") {
+    val root = java.nio.file.Files.createTempDirectory("graft-store-probe")
+    assert(IdaMart.readStoreIfExists(spark, root.resolve("absent").toString).isEmpty)
+    // an existing directory without parquet is not "first load": reading it
+    // must fail, or a broken store would skip the idempotency anti-join
+    intercept[org.apache.spark.sql.AnalysisException](
+      IdaMart.readStoreIfExists(spark, root.toString))
+    Seq(1, 2).toDF("x").write.parquet(root.resolve("store").toString)
+    assert(IdaMart.readStoreIfExists(spark, root.resolve("store").toString)
+      .map(_.count()).contains(2L))
+  }
 }
