@@ -5,12 +5,11 @@ package graft
   * join strategies (broadcast vs shuffle) and whole-stage-codegen spans can
   * be audited per change. Usage: runMain graft.Explain [sfDir] [name ...]
   *
-  * Iterative/seamed operators run eager `localCheckpoint` actions at
-  * DataFrame CONSTRUCTION time, so the final `explain` roots at
-  * `Scan ExistingRDD` and hides the subtree that actually does the work
-  * (the r17 judge's "plan dumps truncated at checkpoint seams" defect). A
-  * QueryExecutionListener captures every construction-time execution —
-  * each checkpoint seam is its own executed plan — and the tool prints
+  * Iterative/seamed operators cut their intermediates at a [[Seam]]: an
+  * eager action at DataFrame CONSTRUCTION time, so the final `explain`
+  * roots at `Scan ExistingRDD` and hides the subtree that actually does
+  * the work. A QueryExecutionListener captures every construction-time
+  * execution — each seam is its own executed plan — and the tool prints
   * them after the final plan, labeled, so the dump shows the WHOLE
   * computation. Memoized spool stagings execute once per JVM and land in
   * whichever gate touched them first; they are labeled the same way.

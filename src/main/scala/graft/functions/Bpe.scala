@@ -243,12 +243,11 @@ object Bpe {
     require(rounds >= 1, s"trainMerges: rounds must be >= 1, got $rounds")
     val normalized = regexp_replace(
       regexp_replace(trim(lower(col(textCol))), s"[$L$R]", ""), "\\s+", " ")
-    val vocab = docs.filter(col(textCol).isNotNull)
+    val vocab = graft.Seam.cut(docs.filter(col(textCol).isNotNull)
       .select(explode(split(normalized, " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .select(regexp_replace(col("w"), "(.)", s"$L$$1$R").as("d"), col("n"))
-      .localCheckpoint(true)
+      .select(regexp_replace(col("w"), "(.)", s"$L$$1$R").as("d"), col("n")))
     try {
       var learned = Vector.empty[(String, String, Long)]
       var words = vocab
@@ -279,10 +278,8 @@ object Bpe {
       }
       learned
     } finally {
-      // vocab is the loop's only checkpoint; its blocks die with training
-      vocab.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
+      // vocab is the loop's only cut; its blocks die with training
+      graft.Seam.release(vocab)
     }
   }
 

@@ -484,14 +484,14 @@ object AnalyticsGates {
     // row_k·col_k) — with ONE mirrored IEEE division at emission. The
     // |langs|-sized marginal frames broadcast; one corpus scan
     Gate("a_cohens_kappa", (s, dir) => {
-      val cells = Tables.documents(s, dir)
+      // three tiny consumers, one corpus pass
+      val cells = Seam.cut(Tables.documents(s, dir)
         .filter(col("text").isNotNull)
         .withColumn("__hits", TextFns.stopwordHits(col("text")))
         .select(col("lang"),
           TextFns.langIdFrom(col("text"), col("__hits")).as("lang_pred"))
         .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // three tiny consumers, one corpus pass
+        .agg(count(lit(1)).as("n")))
       val tot = cells.agg(sum(col("n")).as("n_items"),
         sum(when(col("lang") === col("lang_pred"), col("n"))
           .otherwise(lit(0L))).as("n_agree"))

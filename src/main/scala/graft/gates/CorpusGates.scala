@@ -1177,18 +1177,16 @@ object CorpusGates {
     // over the corpus; marginals broadcast
     Gate("corpus_token_budget", (s, dir) => {
       val budget = 1000000L
-      // two consumers (the rows and their weight total): eager
-      // localCheckpoint of the ~|langs|-row frame so the corpus
-      // aggregation subtree runs once (the Dsir dual-consumer discipline)
-      val toks = Tables.documents(s, dir)
+      // two consumers (the rows and their weight total): cut the
+      // ~|langs|-row frame so the corpus aggregation subtree runs once
+      val toks = Seam.cut(Tables.documents(s, dir)
         .filter(col("text").isNotNull)
         .groupBy(col("lang"))
         .agg(sum(size(TextFns.tokens(col("text"))).cast("long"))
           .as("n_tokens"))
         .filter(col("n_tokens") > 0)
         .withColumn("w_isqrt",
-          floor(sqrt(col("n_tokens").cast("double"))).cast("long"))
-        .localCheckpoint(true)
+          floor(sqrt(col("n_tokens").cast("double"))).cast("long")))
       val tot = toks.agg(sum(col("w_isqrt")).as("__s"))
       toks.crossJoin(broadcast(tot))
         .select(col("lang"), col("n_tokens"), col("w_isqrt"),

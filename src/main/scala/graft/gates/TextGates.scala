@@ -873,15 +873,13 @@ object TextGates {
     Gate("text_tfidf_topk", (s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       // the (doc, term) frame feeds BOTH the df aggregate and the scored
-      // join; localCheckpoint (the [[graft.operators.Dsir]] discipline)
-      // truncates the lineage so the tokenize+explode+agg subtree runs
-      // ONCE instead of once per consumer — r12's driver bench showed a
-      // bimodal 1.6 s / 19 s profile consistent with the un-checkpointed
-      // subtree being re-planned (and its broadcast rebuilt) per run
-      val tf = docs
+      // join; the cut makes the tokenize+explode+agg subtree run ONCE
+      // instead of once per consumer (uncut, a driver bench showed a
+      // bimodal 1.6 s / 19 s profile: the subtree re-planned, and its
+      // broadcast rebuilt, per run)
+      val tf = Seam.cut(docs
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
+        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
       val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
       val w = Window.partitionBy(col("doc_id"))

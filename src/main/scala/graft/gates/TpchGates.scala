@@ -1095,16 +1095,15 @@ object TpchGates {
     // ----- TPC-H Q15 shape: the top supplier(s) by period revenue — the
     // max is a broadcast 1-row frame, not a second scan of lineitem
     Gate("q15_top_supplier", (s, dir) => {
-      // checkpointed: the per-supplier revenue frame (bounded by supplier
-      // count) feeds BOTH the max probe and the join — without it the
-      // lineitem scan+agg subtree would execute twice
-      val revenue = Tables.lineitem(s, dir)
+      // cut: the per-supplier revenue frame (bounded by supplier count)
+      // feeds BOTH the max probe and the join — without it the lineitem
+      // scan+agg subtree would execute twice
+      val revenue = Seam.cut(Tables.lineitem(s, dir)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
         .groupBy(col("l_suppkey"))
         .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("total_revenue"))
-        .localCheckpoint(true)
+          .as("total_revenue")))
       val top = revenue.agg(max(col("total_revenue")).as("__max"))
       Tables.supplier(s, dir)
         .join(revenue, col("s_suppkey") === col("l_suppkey"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Seam
+
 /** Graph clustering for dedup pipelines: connected components over
   * near-duplicate pairs, assigning every document the minimum document id
   * reachable through the pair graph (the cluster's canonical
@@ -23,31 +25,28 @@ import org.apache.spark.storage.StorageLevel
   * computation hands off to [[connectedComponentsStar]]'s contraction
   * (log-round) instead of failing.
   *
-  * Scale notes: labels are `localCheckpoint`ed every round, for two
-  * measured reasons (see repo plan-pitfall notes): iterative
-  * self-referential plans grow analyzer lineage super-linearly, and the
-  * analyzer's self-join deduplication re-aliases a frame referenced twice
-  * in one query (labels feeds both the union and the propagate join) so it
-  * can MISS its own cache entry. Checkpointing materializes each round once
-  * and hands later rounds a flat scan node. On a multi-executor cluster
-  * with preemptible executors, prefer `setCheckpointDir` + `.checkpoint()`
-  * (reliable storage) over executor-local blocks.
+  * Scale notes: labels are cut at a [[graft.Seam]] every round (labels
+  * feed both the union and the propagate join), and each superseded
+  * round's blocks are released as soon as the next round materializes.
+  * The seam's doc says why a cut and not `persist`, and where a reliable
+  * checkpoint for preemptible executors would go.
   */
 object Cluster {
 
-  /** The executor-block-backed RDD behind a `localCheckpoint`ed frame, if
-    * the frame's plan root is the checkpoint's `LogicalRDD`. This is the
-    * handle needed to free a superseded round's blocks the moment the next
-    * round materializes: `Dataset.unpersist` only covers `CacheManager`
-    * entries, and `ContextCleaner` reclaims checkpoint blocks only after a
-    * driver GC notices the dead RDD reference — on a large heap that can
-    * be minutes, during which every retired round's blocks keep stealing
-    * execution/storage memory from the rounds still running (measured as
-    * the 3-5x min-to-max bench spread of the cluster family in r9). */
-  private def releaseCkpt(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+  /** The undirected edge set of the pair graph `(aCol, bCol)`: distinct
+    * `(src, dst)` in both directions. Both directions come from one
+    * explode, NOT a self-union: a union of two selects over `pairs` is two
+    * separate subtrees, so the (often expensive — MinHash banding)
+    * pair-producing pipeline would execute twice before the caller's
+    * persist or cut ever kicks in. Self-loops are kept; callers that drop
+    * them filter `pairs` first. */
+  private[operators] def undirectedEdges(pairs: DataFrame, aCol: String,
+                                         bCol: String): DataFrame =
+    pairs.select(explode(array(
+        struct(col(aCol).as("src"), col(bCol).as("dst")),
+        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .distinct()
 
   /** Connected components of the undirected pair graph `(aCol, bCol)`.
     * Returns one row per node that appears in at least one pair:
@@ -60,15 +59,7 @@ object Cluster {
                           bCol: String = "b", idOut: String = "doc_id",
                           repOut: String = "cluster_rep",
                           maxIters: Int = 25): DataFrame = {
-    // both edge directions via one explode, NOT a self-union: a union of
-    // two selects over `pairs` is two separate subtrees, so the (often
-    // expensive — MinHash banding) pair-producing pipeline would execute
-    // twice before the persist ever kicks in
-    val edges = pairs.select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
+    val edges = undirectedEdges(pairs, aCol, bCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // seed labels with min(own id, min neighbor id): the same single
     // shuffle a distinct-nodes init would cost, but it bakes in the first
@@ -93,33 +84,24 @@ object Cluster {
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    // The label sum rides the checkpoint job via observe(): Dataset
-    // .localCheckpoint(eager) runs through withAction, so the CollectMetrics
-    // row is filled by the SAME job that materializes the round — one driver
-    // round trip per round instead of two (a separate labelSum action was
-    // ~half the loop's fixed overhead at small scale, and at cluster scale
-    // it re-scanned the checkpointed labels once per round).
-    // NULL sum over a NON-EMPTY label set means overflow (non-ANSI NULL),
-    // not a fixpoint — fail loudly rather than silently converging on
-    // garbage.
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) =
-      if (!integralIds) (df.localCheckpoint(true), null)
+    // The label sum rides the round's cut. NULL sum over a NON-EMPTY label
+    // set means overflow (non-ANSI NULL), not a fixpoint — fail loudly
+    // rather than silently converging on garbage.
+    def cutWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) =
+      if (!integralIds) (Seam.cut(df), null)
       else {
-        val obs = org.apache.spark.sql.Observation()
-        val ck = df.observe(obs,
-            sum(col("label").cast("decimal(38,0)")).as("s"),
-            count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        val m = obs.get
-        val s = m("s").asInstanceOf[java.math.BigDecimal]
+        val (ck, m) = Seam.cut(df,
+          sum(col("label").cast("decimal(38,0)")).as("s"),
+          count(lit(1)).as("n"))
+        val s = m.getAs[java.math.BigDecimal]("s")
         if (s == null) {
-          require(m("n").asInstanceOf[Long] == 0L,
+          require(m.getAs[Long]("n") == 0L,
             "connectedComponents: label sum overflowed decimal(38,0); " +
               "convergence probe unusable for this id range")
           (ck, java.math.BigDecimal.ZERO) // empty label set
         } else (ck, s)
       }
-    val seeded = checkpointWithSum(seedPlan)
+    val seeded = cutWithSum(seedPlan)
     var labels = seeded._1
     var prevSum = seeded._2
     var converged = false
@@ -129,22 +111,21 @@ object Cluster {
         .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
         .select(col("dst").as("id"), col("label"))
       if (integralIds) {
-        val (next, nextSum) = checkpointWithSum(
+        val (next, nextSum) = cutWithSum(
           labels.unionByName(propagated).groupBy("id").agg(min("label").as("label")))
         converged = prevSum != null && nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
-        releaseCkpt(labels) // next is materialized; the old round's blocks are dead
+        Seam.release(labels) // next is materialized; the old round's blocks are dead
         labels = next
       } else {
-        val next = labels.unionByName(propagated)
-          .groupBy("id").agg(min("label").as("label"))
-          .localCheckpoint(true)
+        val next = Seam.cut(labels.unionByName(propagated)
+          .groupBy("id").agg(min("label").as("label")))
         val changed = next.as("n")
           .join(labels.as("p"), col("n.id") === col("p.id"))
           .filter(col("n.label") =!= col("p.label"))
           .limit(1).count() // limit(1): existence probe, not a full count
         converged = changed == 0L
-        releaseCkpt(labels) // after the probe join — it read the old labels
+        Seam.release(labels) // after the probe join — it read the old labels
         labels = next
       }
       iters += 1
@@ -158,12 +139,12 @@ object Cluster {
       // fresh round budget: the propagation bound it just exhausted says
       // nothing about contraction rounds, which grow with log²(n), not
       // diameter — 64 covers any graph that fits in storage
-      releaseCkpt(labels) // propagation's last round is abandoned wholesale
+      Seam.release(labels) // propagation's last round is abandoned wholesale
       val star = starContract(
         edges.select(col("src").as("u"), col("dst").as("v")),
         math.max(maxIters, 64))
-      val out = star.select(col("id").as(idOut), col("label").as(repOut))
-        .localCheckpoint(true)
+      val out = Seam.cut(
+        star.select(col("id").as(idOut), col("label").as(repOut)))
       edges.unpersist()
       return out
     }
@@ -185,11 +166,7 @@ object Cluster {
                               bCol: String = "b", idOut: String = "doc_id",
                               repOut: String = "cluster_rep",
                               maxIters: Int = 25): DataFrame = {
-    val bi = pairs.select(explode(array(
-        struct(col(aCol).as("u"), col(bCol).as("v")),
-        struct(col(bCol).as("u"), col(aCol).as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct().localCheckpoint(true)
+    val bi = Seam.cut(undirectedEdges(pairs, aCol, bCol).toDF("u", "v"))
     starContract(bi, maxIters)
       .select(col("id").as(idOut), col("label").as(repOut))
   }
@@ -199,26 +176,22 @@ object Cluster {
     // every node of the pair graph, including self-pair-only nodes — the
     // final star edges name every non-root node exactly once, so roots and
     // self-loop singletons are restored by a left join at the end
-    val nodes = bi.select(col("u").as("id")).distinct().localCheckpoint(true)
+    val nodes = Seam.cut(bi.select(col("u").as("id")).distinct())
 
     // set signature for convergence: (count, sum of a 64-bit edge hash) —
     // order/partitioning invariant, one narrow scan. The potential function
     // of the star steps strictly decreases until the fixpoint, so an
     // unchanged edge set after a full large+small round IS convergence.
-    // Like the propagation loop's sum probe, the signature rides the
-    // checkpoint job via observe() — one driver round trip per round.
-    def checkpointWithSig(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n"),
-          coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-            lit(java.math.BigDecimal.ZERO)).as("h"))
-        .localCheckpoint(true)
-      val m = obs.get
-      (ck, (m("n").asInstanceOf[Long], m("h").asInstanceOf[java.math.BigDecimal]))
+    // Like the propagation loop's sum probe, the signature rides the cut.
+    def cutWithSig(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
+      val (ck, m) = Seam.cut(df, count(lit(1)).as("n"),
+        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
+          lit(java.math.BigDecimal.ZERO)).as("h"))
+      (ck, (m.getLong(0), m.getDecimal(1)))
     }
 
     // one undirected edge per unordered pair, no self-loops
-    val init = checkpointWithSig(bi.filter(col("u") < col("v")))
+    val init = cutWithSig(bi.filter(col("u") < col("v")))
     var edges = init._1
 
     def bidirect(df: DataFrame): DataFrame =
@@ -256,8 +229,8 @@ object Cluster {
     var converged = prev._1 == 0L // an edge-free graph is already done
     var iters = 0
     while (!converged && iters < maxIters) {
-      val round = checkpointWithSig(smallStar(largeStar(edges)))
-      releaseCkpt(edges) // the new round is materialized; retire the old one
+      val round = cutWithSig(smallStar(largeStar(edges)))
+      Seam.release(edges) // the new round is materialized; retire the old one
       edges = round._1
       val sig = round._2
       converged = sig == prev
@@ -284,9 +257,9 @@ object Cluster {
     * fixpoint detection would make row values depend on a convergence
     * tolerance). Each round is one shuffle join (push `pr/deg` mass along
     * edges) plus one shuffle aggregate keyed the same way — at any scale
-    * the round cost is two exchanges over the edge frame, and labels ride
-    * [[DataFrame.localCheckpoint]] between rounds (same lineage discipline
-    * as [[connectedComponents]]). Per-node in-mass sums ride the decimal
+    * the round cost is two exchanges over the edge frame, and ranks are
+    * cut at a [[graft.Seam]] between rounds (as in
+    * [[connectedComponents]]). Per-node in-mass sums ride the decimal
     * carrier, so ranks are partition-order invariant — identical on 1
     * executor or 1000. Teleport mass is written `(1.0 - damping)` on BOTH
     * engine and oracle sides: the IEEE subtraction, not a rounded literal,
@@ -299,21 +272,16 @@ object Cluster {
                iters: Int = 3, damping: Double = 0.85,
                idOut: String = "doc_id"): DataFrame = {
     require(iters >= 1, s"pagerank: iters must be >= 1, got $iters")
-    val edges = pairs.select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
+    val edges = undirectedEdges(pairs, aCol, bCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .withColumnRenamed("src", "node")
     // node count as a broadcast 1-row frame: keeps the whole computation
     // lazy (no driver-synchronous count action before execution)
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-    var pr = deg.crossJoin(broadcast(nNodes))
+    var pr = Seam.cut(deg.crossJoin(broadcast(nNodes))
       .select(col("node"), col("deg"), col("n_nodes"),
-        (lit(1.0) / col("n_nodes")).as("pr"))
-      .localCheckpoint(true)
+        (lit(1.0) / col("n_nodes")).as("pr")))
     var round = 0
     while (round < iters) {
       val mass = pr.join(edges, pr("node") === edges("src"))
@@ -321,13 +289,12 @@ object Cluster {
           (col("pr") / col("deg")).cast("decimal(28,14)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("mass"))
       val prev = pr
-      pr = pr.select(col("node"), col("deg"), col("n_nodes"))
+      pr = Seam.cut(pr.select(col("node"), col("deg"), col("n_nodes"))
         .join(mass, col("node") === col("dst"))
         .select(col("node"), col("deg"), col("n_nodes"),
           ((lit(1.0) - lit(damping)) / col("n_nodes") +
-            lit(damping) * col("mass").cast("double")).as("pr"))
-        .localCheckpoint(true)
-      releaseCkpt(prev)
+            lit(damping) * col("mass").cast("double")).as("pr")))
+      Seam.release(prev)
       round += 1
     }
     edges.unpersist(blocking = false)
@@ -350,42 +317,35 @@ object Cluster {
     *
     * Scale shape: per round, one join of the edge frame against the
     * vector frame + one hash aggregate — the same shuffle budget as a
-    * pagerank round; `localCheckpoint` truncates the lineage per round
-    * (the pagerank discipline). */
+    * pagerank round; a [[graft.Seam]] cut truncates the lineage per round
+    * (as in pagerank). */
   def hits(pairs: DataFrame, aCol: String = "a", bCol: String = "b",
            iters: Int = 2, idOut: String = "doc_id"): DataFrame = {
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    val edges = pairs.select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
+    val edges = undirectedEdges(pairs, aCol, bCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .withColumnRenamed("src", "node")
-    var hub = deg.select(col("node"), lit(1L).as("hub"))
-      .localCheckpoint(true)
+    var hub = Seam.cut(deg.select(col("node"), lit(1L).as("hub")))
     var auth: DataFrame = null
     var round = 0
     while (round < iters) {
       val prevHub = hub
       val prevAuth = auth
-      auth = edges.join(hub, edges("src") === hub("node"))
+      auth = Seam.cut(edges.join(hub, edges("src") === hub("node"))
         .groupBy(edges("dst")).agg(sum(col("hub")).as("auth"))
-        .withColumnRenamed("dst", "node")
-        .localCheckpoint(true)
-      hub = edges.join(auth, edges("dst") === auth("node"))
+        .withColumnRenamed("dst", "node"))
+      hub = Seam.cut(edges.join(auth, edges("dst") === auth("node"))
         .groupBy(edges("src")).agg(sum(col("auth")).as("hub"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(true)
-      releaseCkpt(prevHub)
-      if (prevAuth != null) releaseCkpt(prevAuth)
+        .withColumnRenamed("src", "node"))
+      Seam.release(prevHub)
+      if (prevAuth != null) Seam.release(prevAuth)
       round += 1
     }
     // materialize deg BEFORE releasing edges: deg is a lazy aggregate over
     // the persisted edge frame, and unpersisting first would force the
     // whole explode+distinct subtree to recompute at the caller's action
-    val degC = deg.localCheckpoint(true)
+    val degC = Seam.cut(deg)
     val out = degC.join(auth, Seq("node")).join(hub, Seq("node"))
       .select(col("node").as(idOut), col("deg"),
         col("auth").cast("long").as("auth"), col("hub").cast("long").as("hub"))
@@ -405,37 +365,29 @@ object Cluster {
     * async/fixpoint variants make results order-dependent). Each round is
     * one shuffle join (push labels along edges) plus a two-level aggregate:
     * neighbor-label counts, then per-node argmax with count-desc /
-    * label-asc tie-break — fully deterministic, integer-only. Labels ride
-    * [[DataFrame.localCheckpoint]] between rounds ([[connectedComponents]]
-    * lineage discipline); per-round cost is two exchanges over the edge
-    * frame at any scale.
+    * label-asc tie-break — fully deterministic, integer-only. Labels are
+    * cut at a [[graft.Seam]] between rounds (as in [[connectedComponents]]);
+    * per-round cost is two exchanges over the edge frame at any scale.
     *
     * Returns one row per node: `(idOut, community, community_size)`. */
   def labelPropagation(pairs: DataFrame, aCol: String = "a",
                        bCol: String = "b", iters: Int = 3,
                        idOut: String = "doc_id"): DataFrame = {
     require(iters >= 1, s"labelPropagation: iters must be >= 1, got $iters")
-    val edges = pairs.select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val edges = undirectedEdges(pairs.filter(col(aCol) =!= col(bCol)), aCol, bCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var lab = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lab"))
-      .localCheckpoint(true)
+    var lab = Seam.cut(edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lab")))
     var round = 0
     while (round < iters) {
       val prev = lab
-      lab = edges.join(lab, edges("src") === lab("node"))
+      lab = Seam.cut(edges.join(lab, edges("src") === lab("node"))
         .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("c"))
         .groupBy(col("dst"))
         .agg(min_by(col("lab"), struct((-col("c")).as("nc"), col("lab")))
           .as("lab"))
-        .select(col("dst").as("node"), col("lab"))
-        .localCheckpoint(true)
-      releaseCkpt(prev)
+        .select(col("dst").as("node"), col("lab")))
+      Seam.release(prev)
       round += 1
     }
     edges.unpersist(blocking = false)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Seam
+
 /** Exact distribution-drift tests between two samples of one numeric
   * column — the monitoring primitive a feature store runs per feature per
   * day (complementing the binned KL estimate in `quality_kl_drift` with
@@ -522,16 +524,15 @@ object Drift {
     * group, a broadcast-sized intermediate at any corpus scale. */
   def kendallDaily(df: DataFrame, group: Column, ts: Column,
                    value: Column): DataFrame = {
-    // both self-join arms consume the daily frame: checkpoint it so the
-    // corpus is scanned ONCE (the dual-consumer discipline — without it
-    // the pre-exec plan shows two full parquet scans)
-    val daily = df
+    // both self-join arms consume the daily frame: cut it so the corpus
+    // is scanned ONCE (without it the pre-exec plan shows two full
+    // parquet scans)
+    val daily = Seam.cut(df
       .filter(ts.isNotNull && value.isNotNull)
       .groupBy(group.as("g"), to_date(ts).as("d"))
       .agg(count(lit(1)).as("x"),
         (sum(graft.functions.Fns.dec(value)) * lit(1000000))
-          .cast("long").as("y"))
-      .localCheckpoint(true)
+          .cast("long").as("y")))
     val a = daily.select(col("g"), col("d").as("da"),
       col("x").as("xa"), col("y").as("ya"))
     val b = daily.select(col("g").as("gb"), col("d").as("db"),
@@ -612,12 +613,11 @@ object Drift {
   def kruskalWallis(df: DataFrame, group: Column, value: Column)
       : DataFrame = {
     // the (v, g) frame feeds the rank join AND (via byV) the rank window
-    // and the tie mass: checkpoint it so the corpus is scanned once;
-    // downstream recomputes are over the bounded distinct-value frame
-    val byVG = df.filter(value.isNotNull)
+    // and the tie mass: cut it so the corpus is scanned once; downstream
+    // recomputes are over the bounded distinct-value frame
+    val byVG = Seam.cut(df.filter(value.isNotNull)
       .select(value.as("v"), group.as("g"))
-      .groupBy(col("v"), col("g")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("v"), col("g")).agg(count(lit(1)).as("c")))
     val byV = byVG.groupBy(col("v")).agg(sum(col("c")).as("cnt"))
     val w = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -721,10 +721,10 @@ object Drift {
     * |days|-bounded nonzero differences, one 1-row aggregate. */
   def wilcoxonSignedRank(df: DataFrame, group: Column, ts: Column,
                          keyA: String, keyB: String): DataFrame = {
-    val daily = df.filter(ts.isNotNull)
+    // two key-filter consumers, one corpus pass
+    val daily = Seam.cut(df.filter(ts.isNotNull)
       .groupBy(group.as("g"), to_date(ts).as("d"))
-      .agg(count(lit(1)).as("x"))
-      .localCheckpoint(true) // two key-filter consumers, one corpus pass
+      .agg(count(lit(1)).as("x")))
     val a = daily.filter(col("g") === keyA)
       .select(col("d"), col("x").as("xa"))
     val b = daily.filter(col("g") === keyB)

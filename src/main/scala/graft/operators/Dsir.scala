@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Seam
+
 import graft.functions.{FixedLog, HashExprs, SketchOracleSql}
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al., "Data
@@ -19,7 +21,7 @@ import graft.functions.{FixedLog, HashExprs, SketchOracleSql}
   *
   * Scale shape (mirrors [[LangModel.bigramNll]]'s discipline):
   *  - ONE bigram explode pass feeds everything: the per-(doc, bucket)
-  *    count aggregate is the only persisted frame (bounded per doc by
+  *    count aggregate is the only materialized frame (bounded per doc by
   *    min(bigrams, buckets)), and BOTH distributions are rollups of it —
   *    target = the rows whose doc is in the target slice, raw = all rows —
   *    so the corpus token stream is scanned exactly once;
@@ -338,22 +340,15 @@ object Dsir {
   }
 
   /** Stage 2: per-(doc, bucket) occurrence counts — the ONE materialized
-    * frame; both model distributions and the final scores are
-    * rollups/joins of it. Eager localCheckpoint, NOT persist: a persisted
-    * frame registers in the CacheManager and lives until an explicit
-    * unpersist — which a lazily-returned DataFrame can never safely
-    * issue — so composed callers would leak one MEMORY_AND_DISK frame per
-    * call (r11 judge item). Checkpoint blocks are owned by the RDD and
-    * reclaimed by the ContextCleaner once the returned plan is
-    * garbage-collected (the [[Cluster]] discipline). */
+    * frame (a [[graft.Seam]] cut); both model distributions and the final
+    * scores are rollups/joins of it. */
   private[operators] def dbcOf(bigrams: DataFrame, idCol: String): DataFrame =
-    bigrams
+    Seam.cut(bigrams
       .select(col(idCol), col("__tgt"),
         pmod(HashExprs.fnv1a64Col(col("bg")), lit(Buckets.toLong))
           .cast("int").as("bucket"))
       .groupBy(col(idCol), col("__tgt"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("c")))
 
   /** Stage 3: the fitted ≤[[Buckets]]-row model. Emits `bucket`, the raw
     * scale-12 log-ratio `__lr12` (BIGINT), and its DECIMAL(18,6)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Seam
+
 /** Distributed triangle counting — the clustering-coefficient /
   * community-density primitive over similarity graphs (e.g. the near-dup
   * pair graph, where triangle density distinguishes boilerplate families
@@ -90,36 +92,29 @@ object Graph {
     * FIXED `rounds` of synchronous peeling (the [[graft.operators.Cluster]]
     * fixed-round discipline — oracle-unrollable, deterministic): each
     * round is one degree aggregate plus two semi joins filtering both
-    * endpoints, with the edge frame checkpointed between rounds. Peeling
-    * converges in at most the longest "peel chain" — single digits for
-    * similarity graphs; a production caller loops until the observe()'d
-    * edge count stops moving, exactly like `kmeans_converged`.
+    * endpoints, with the edge frame cut at a [[graft.Seam]] between
+    * rounds. Peeling converges in at most the longest "peel chain" —
+    * single digits for similarity graphs; a production caller loops until
+    * the edge count probed on the cut stops moving, exactly like
+    * `kmeans_converged`.
     *
     * Returns surviving `(idOut, deg)` — degree WITHIN the peeled core. */
   def kCore(pairs: DataFrame, k: Int, rounds: Int,
             aCol: String = "a", bCol: String = "b",
             idOut: String = "doc_id"): DataFrame = {
     require(k >= 1 && rounds >= 1, "kCore: k >= 1, rounds >= 1")
-    var edges = pairs.select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+    var edges = Seam.cut(
+      Cluster.undirectedEdges(pairs.filter(col(aCol) =!= col(bCol)), aCol, bCol))
     var r = 0
     while (r < rounds) {
       val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("node"))
       val prev = edges
-      edges = edges
+      edges = Seam.cut(edges
         .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      prev.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
+        .select(col("src"), col("dst")))
+      Seam.release(prev)
       r += 1
     }
     edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -136,9 +131,9 @@ object Graph {
     *
     * Classic synchronous frontier (Pregel/Bellman-Ford over unit
     * weights): each round one join pushes `dist+1` along edges and a
-    * min-aggregate merges with the standing distances; the frame rides
-    * `localCheckpoint` with eager predecessor release (the
-    * [[Cluster.pagerank]] round discipline). Integer-only, so an oracle
+    * min-aggregate merges with the standing distances; the frame is cut at
+    * a [[graft.Seam]] with eager predecessor release (as in
+    * [[Cluster.pagerank]]). Integer-only, so an oracle
     * unrolls the rounds exactly. Cost per round: one shuffle join of the
     * REACHED set against edges — at 100 TB the frontier set, not the
     * graph, bounds the reduce side. Returns `(idOut, dist)` for every
@@ -146,27 +141,19 @@ object Graph {
   def bfsHops(pairs: DataFrame, rounds: Int, aCol: String = "a",
               bCol: String = "b", idOut: String = "doc_id"): DataFrame = {
     require(rounds >= 1, s"bfsHops: rounds must be >= 1, got $rounds")
-    val edges = pairs.select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = edges.agg(min(col("src")).as("node"))
-      .select(col("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
+    val edges =
+      Cluster.undirectedEdges(pairs.filter(col(aCol) =!= col(bCol)), aCol, bCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var dist = Seam.cut(edges.agg(min(col("src")).as("node"))
+      .select(col("node"), lit(0).as("dist")))
     var r = 0
     while (r < rounds) {
       val pushed = dist.join(edges, dist("node") === edges("src"))
         .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
       val prev = dist
-      dist = dist.unionByName(pushed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      prev.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
+      dist = Seam.cut(dist.unionByName(pushed)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
+      Seam.release(prev)
       r += 1
     }
     edges.unpersist(blocking = false)
@@ -198,10 +185,11 @@ object Graph {
     * Scale shape: each fixpoint step is one equi-join (color/mark pushed
     * along the live edge frame) + one hash aggregate, the [[bfsHops]] /
     * Cluster discipline; live-edge restriction is two semi-joins; every
-    * iteration state is localCheckpointed so lineage stays flat; the only
-    * driver-side values are 1-row convergence aggregates and the outer
-    * loop's emptiness count. Rounds, not data, are the scale cost — the
-    * published bound is O(log n) expected rounds for the coloring family.
+    * iteration state is cut at a [[graft.Seam]] so lineage stays flat, and
+    * the only driver-side values — the 1-row convergence aggregates and
+    * the outer loop's unassigned count — ride those cuts, one job per
+    * round. Rounds, not data, are the scale cost — the published bound is
+    * O(log n) expected rounds for the coloring family.
     *
     * Returns one row per node: `(idOut, scc_id)`. */
   def scc(edges0: DataFrame, srcCol: String = "src", dstCol: String = "dst",
@@ -215,57 +203,62 @@ object Graph {
     val nodes = edges.select(col("src").as("n"))
       .unionByName(edges.select(col("dst").as("n")))
       .distinct()
-    var unassigned = nodes.localCheckpoint(true)
+    val nodeCount = count(lit(1)).as("n_nodes")
+    var (unassigned, nLeft) = Seam.cut(nodes, nodeCount)
     var assigned: DataFrame = null // (n, c) with c the round's root id
-    while (unassigned.limit(1).count() > 0) {
-      val live = edges
+    while (nLeft.getLong(0) > 0) {
+      val live = Seam.cut(edges
         .join(unassigned.select(col("n").as("src")), Seq("src"), "left_semi")
-        .join(unassigned.select(col("n").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
+        .join(unassigned.select(col("n").as("dst")), Seq("dst"), "left_semi"))
       // (1) forward max-id coloring to fixpoint; colors only grow, so the
-      // 1-row sum is a strictly-increasing convergence measure
-      var color = unassigned.select(col("n"), col("n").as("c"))
-        .localCheckpoint(true)
+      // 1-row sum is a strictly-increasing convergence measure.
       // decimal(38,0) carrier: the sum of n ids overflows int64 long
       // before the ids themselves do
-      def colorSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(sum(col("c").cast("decimal(38,0)"))).head
-          .getDecimal(0)
-      var measure = colorSum(color)
+      val colorSum = sum(col("c").cast("decimal(38,0)")).as("c_sum")
+      var (color, measure) =
+        Seam.cut(unassigned.select(col("n"), col("n").as("c")), colorSum)
       var fixed = false
       while (!fixed) {
         val pushed = color.join(live, color("n") === live("src"))
           .select(col("dst").as("n"), col("c"))
-        val next = color.unionByName(pushed)
-          .groupBy(col("n")).agg(max(col("c")).as("c"))
-          .localCheckpoint(true)
-        val m2 = colorSum(next)
-        fixed = m2.compareTo(measure) == 0
+        val (next, m2) = Seam.cut(color.unionByName(pushed)
+          .groupBy(col("n")).agg(max(col("c")).as("c")), colorSum)
+        fixed = m2.getDecimal(0).compareTo(measure.getDecimal(0)) == 0
         measure = m2
+        Seam.release(color)
         color = next
       }
       // (2) backward membership from the roots, restricted to the color
       // class; the marked set only grows, so its count is the measure
-      var marked = color.filter(col("n") === col("c")).localCheckpoint(true)
-      var cnt = marked.count()
+      val markedCount = count(lit(1)).as("n_marked")
+      var (marked, cnt) =
+        Seam.cut(color.filter(col("n") === col("c")), markedCount)
       fixed = false
       while (!fixed) {
         val pulled = marked.join(live, marked("n") === live("dst"))
           .select(col("src").as("n"), col("c"))
           .join(color, Seq("n", "c"), "left_semi") // u must wear the color
-        val next = marked.unionByName(pulled).distinct().localCheckpoint(true)
-        val c2 = next.count()
-        fixed = c2 == cnt
+        val (next, c2) =
+          Seam.cut(marked.unionByName(pulled).distinct(), markedCount)
+        fixed = c2.getLong(0) == cnt.getLong(0)
         cnt = c2
+        // a superseded round; only the final marked set is read (lazily,
+        // by the assigned union), so it alone is kept
+        Seam.release(marked)
         marked = next
       }
+      Seam.release(color)
+      Seam.release(live)
       // (3) peel
       assigned =
         if (assigned == null) marked else assigned.unionByName(marked)
-      unassigned = unassigned
-        .join(marked.select(col("n")), Seq("n"), "left_anti")
-        .localCheckpoint(true)
+      val (rest, n2) = Seam.cut(unassigned
+        .join(marked.select(col("n")), Seq("n"), "left_anti"), nodeCount)
+      Seam.release(unassigned)
+      unassigned = rest
+      nLeft = n2
     }
+    Seam.release(unassigned)
     edges.unpersist(blocking = false)
     if (assigned == null)
       return nodes.select(col("n").as(idOut), col("n").as("scc_id"))
@@ -288,7 +281,7 @@ object Graph {
     * enforces the DAG contract instead of assuming it.
     *
     * Scale shape: per round one equi-join (levels pushed along edges) +
-    * one max-aggregate, state localCheckpointed; rounds = DAG depth
+    * one max-aggregate, state cut at a [[graft.Seam]]; rounds = DAG depth
     * (condensations of real graphs are shallow — the giant-SCC collapse
     * is exactly what bounds them). Returns `(node, level)`.
     *
@@ -313,7 +306,7 @@ object Graph {
         .unionByName(endpoints))
       .getOrElse(endpoints)
       .distinct()
-    var level = nodes.select(col("n"), lit(0L).as("l")).localCheckpoint(true)
+    var level = Seam.cut(nodes.select(col("n"), lit(0L).as("l")))
     // initial measure is 0 by construction (every seed level is 0) — no job
     var m = 0L
     var fixed = false
@@ -324,19 +317,16 @@ object Graph {
         "lift to the condensation first)")
       val pushed = level.join(edges, level("n") === edges("src"))
         .select(col("dst").as("n"), (col("l") + 1L).as("l"))
-      // the level-sum convergence measure rides the checkpoint job via
-      // observe() (the kmeansLloyd / connectedComponents discipline) —
-      // previously a SEPARATE aggregate job per round, i.e. 2 driver
-      // round trips per round where 1 suffices. coalesce: sum over ZERO
-      // rows is NULL — an empty universe must converge at 0, not NPE.
-      val obs = org.apache.spark.sql.Observation()
-      val next = level.unionByName(pushed)
-        .groupBy(col("n")).agg(max(col("l")).as("l"))
-        .observe(obs, coalesce(sum(col("l")), lit(0L)).as("m"))
-        .localCheckpoint(true)
-      val m2 = obs.get("m").asInstanceOf[Long]
+      // the level-sum convergence measure rides the round's cut.
+      // coalesce: sum over ZERO rows is NULL — an empty universe must
+      // converge at 0, not NPE.
+      val (next, probe) = Seam.cut(level.unionByName(pushed)
+          .groupBy(col("n")).agg(max(col("l")).as("l")),
+        coalesce(sum(col("l")), lit(0L)).as("m"))
+      val m2 = probe.getLong(0)
       fixed = m2 == m
       m = m2
+      Seam.release(level)
       level = next
       r += 1
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Seam
 import graft.functions.FixedLog
 
 /** Statistical language-model quality scoring — the CCNet-style filter
@@ -69,14 +70,9 @@ object LangModel {
       .filter(col("ptid").isNotNull)
       .select(col(idCol), col("ptid"), col("tid"))
     // the ONE materialized frame: per-doc bigram counts (int keys) — feeds
-    // the model rollups and the scoring join. Eager localCheckpoint, not
-    // persist: persist registers in the CacheManager and leaks per
-    // composed call; checkpoint blocks are RDD-owned and reclaimed by the
-    // ContextCleaner once the returned plan is unreferenced (the
-    // [[Dsir]]/[[Cluster]] discipline).
-    val dbc = bi.groupBy(col(idCol), col("ptid"), col("tid"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    // the model rollups and the scoring join
+    val dbc = Seam.cut(bi.groupBy(col(idCol), col("ptid"), col("tid"))
+      .agg(count(lit(1)).as("c")))
     val big = dbc.groupBy(col("ptid"), col("tid")).agg(sum(col("c")).as("cb"))
     val uni = big.groupBy(col("ptid")).agg(sum(col("cb")).as("cu"))
     // -ln((cb+k)/(cu+kV)) with k = p/s an exact short decimal: scale both
@@ -138,11 +134,10 @@ object LangModel {
       .filter(col(textCol).isNotNull && trim(col(textCol)) =!= "")
       .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as(as))
-    // eager localCheckpoint, not persist — the [[Dsir]] leak discipline
-    val vocab = counts(a, "ca").join(counts(b, "cb"), Seq("tok"), "full_outer")
-      .select(col("tok"), coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb"))
-      .localCheckpoint(true)
+    val vocab = Seam.cut(
+      counts(a, "ca").join(counts(b, "cb"), Seq("tok"), "full_outer")
+        .select(col("tok"), coalesce(col("ca"), lit(0L)).as("ca"),
+          coalesce(col("cb"), lit(0L)).as("cb")))
     val totals = vocab.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       count(lit(1)).as("v"))
     val base = vocab.crossJoin(broadcast(totals))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Seam
 import graft.functions.VectorFns
 
 /** Product quantization (Jégou/Douze/Schmid, "Product Quantization for
@@ -73,10 +74,9 @@ object Pq {
     // representation the PQ compression claim is about
     val seeds = Similarity.sampledCodebook(clean, k, idCol, vecCol,
       denseIds = true)
-    var cents = seeds.select(col("centroid_id"), posexplode(
+    var cents = Seam.cut(seeds.select(col("centroid_id"), posexplode(
         array((0 until m).map(s => sub(col("c_vec"), s, d)): _*))
-      .as(Seq("subspace", "c_vec")))
-      .localCheckpoint(true)
+      .as(Seq("subspace", "c_vec"))))
     (0 until iters).foreach { _ =>
       val assigned = slices.join(broadcast(cents), Seq("subspace"))
         .withColumn("__d", VectorFns.l2DistSq(col("sv"), col("c_vec")))
@@ -92,11 +92,12 @@ object Pq {
         .agg(graft.functions.Fns.sumExact(col("x").cast("double")).as("s"),
           count(lit(1)).as("n"))
         .withColumn("mv", col("s") / col("n"))
-      cents = perDim
+      val prev = cents
+      cents = Seam.cut(perDim
         .groupBy(col("subspace"), col("centroid_id"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("mv")))),
-          t => t.getField("mv")).as("c_vec"))
-        .localCheckpoint(true)
+          t => t.getField("mv")).as("c_vec")))
+      Seam.release(prev)
     }
     // rounds are eagerly checkpointed, so the staged slices have no
     // remaining consumer by the time the codebooks are returned

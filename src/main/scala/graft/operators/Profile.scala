@@ -45,8 +45,8 @@ object Profile {
     * bounded-cardinality count, so map-side combine collapses the
     * expansion before the exchange and the scan IO — the dominant cost
     * at 100 TB — is paid once. The grouped cells frame (1 + 9 digits +
-    * grid cells + 10 bins + |keys| rows) is localCheckpoint'ed and every
-    * section derives from it without touching the table again.
+    * grid cells + 10 bins + |keys| rows) is cut at a [[graft.Seam]] and
+    * every section derives from it without touching the table again.
     *
     * Determinism: every emitted metric is an exact integer — counts,
     * cents (floor(x*100+0.5), the exact BIGINT carrier for 2-decimal
@@ -69,8 +69,8 @@ object Profile {
                  topK: Int = 5): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    val cells = profileCells(df, priceCol, catCol, keyCol,
-      bandLo, bandHi, binWidth).localCheckpoint(true)
+    val cells = graft.Seam.cut(profileCells(df, priceCol, catCol, keyCol,
+      bandLo, bandHi, binWidth))
     val global = cells.filter(col("gid") === 31)
       .select(col("n"), col("sum_cents"), col("min_cents"), col("max_cents"))
     def sect(name: String) = lit(name).as("section")

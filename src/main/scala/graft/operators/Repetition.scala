@@ -124,14 +124,7 @@ object Repetition {
     // the wide work stays in the row: tokenize once, fold the token
     // array's run-length multiplicities per row (runLengths), and reduce
     // bigram repetition to size/array_distinct of the in-row bigram
-    // array. The former shape — explode every unigram+bigram occurrence
-    // into a kind-tagged gram STREAM, shuffle (doc, gram-string) pairs,
-    // and localCheckpoint the token-scale count frame — moved
-    // corpus-token-count rows through an exchange and materialized them
-    // to executor memory for work the row itself can do (sf1: 13.4 s vs
-    // 2.3 s at sf0.1, checkpoint+exchange dominated). Values are
-    // unchanged (same multiplicities, same integer entropy chain), so
-    // the DuckDB oracle restatement stands as-is.
+    // array: no token-scale frame ever crosses an exchange or a seam.
     val base = docs
       .filter(col(textCol).isNotNull && trim(col(textCol)) =!= "")
       .withColumn("__toks", split(trim(lower(col(textCol))), "\\s+"))
@@ -145,12 +138,11 @@ object Repetition {
         (a, b) => concat(a, lit(" "), b)))
       .otherwise(array().cast("array<string>"))
     // ONE corpus scan into a compact per-doc frame (scalars + the
-    // multiplicity longs — no text, no token strings), eagerly
-    // checkpointed for its THREE consumers (the emitted row, the entropy
-    // explode, the ln table's distinct counts) — the dual-consumer
-    // checkpoint discipline; without it each consumer re-scans and
+    // multiplicity longs — no text, no token strings), cut for its THREE
+    // consumers (the emitted row, the entropy explode, the ln table's
+    // distinct counts); without it each consumer re-scans and
     // re-tokenizes the corpus
-    val perDoc = base.select(
+    val perDoc = graft.Seam.cut(base.select(
       col(idCol),
       size(col("__toks")).cast("bigint").as("n_words"),
       (length(regexp_replace(trim(col(textCol)), "\\s+", "")).cast("double")
@@ -166,8 +158,7 @@ object Repetition {
       array_max(col("__runs")).as("__top"),
       size(bigrams).cast("bigint").as("__nbi"),
       size(array_distinct(bigrams)).cast("bigint").as("__dbi"),
-      col("__runs"))
-      .localCheckpoint(true)
+      col("__runs")))
     val narrow = perDoc.drop("__runs")
     // entropy is the one signal that still leaves the row: Σ c·ln(c)
     // needs the scale-12 integer ln, and the FixedLog placement rule

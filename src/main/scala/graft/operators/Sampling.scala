@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Seam
 import graft.functions.HashExprs
 
 /** Deterministic corpus sampling for training-data pipelines.
@@ -172,18 +173,15 @@ object Sampling {
     // defined stage, and leaving nulls in the histogram while the
     // equi-join silently dropped the rows would skew every boundary
     // (nulls counted in __tot but unreachable) — drop them from BOTH.
-    // Eager localCheckpoint (the Dsir/kappa dual-consumer discipline):
-    // the scored frame feeds BOTH the histogram derivation and the join's
-    // left side, and without the cut the caller's whole scoring chain
+    // The scored frame feeds BOTH the histogram derivation and the join's
+    // left side; without the cut the caller's whole scoring chain
     // (tokenize + stopword scan of the corpus) runs twice — measured
-    // locally at sf0.1: 4.4 s -> ~2.5 s for the bucket gate. The
-    // materialized frame is the narrow (key, score[, passthrough]) row,
-    // not the text. (r18 re-measured SKIPPING this cut for callers whose
-    // input already derives from a checkpointed seam: the dual-consumer
-    // re-run of the decontamination gram probe inside the final plan cost
-    // MORE than the saved round trip — curate_to_shards 5.66 → 6.84 s at
-    // 32c — so the cut stays unconditional.)
-    val scored = df.filter(col(scoreCol).isNotNull).localCheckpoint(true)
+    // locally at sf0.1: 4.4 s -> ~2.5 s for the bucket gate. The cut stays
+    // unconditional: skipping it for callers whose input already derives
+    // from a seam re-runs the decontamination gram probe inside the final
+    // plan, which costs MORE than the saved round trip (curate_to_shards
+    // 5.66 → 6.84 s at 32c).
+    val scored = Seam.cut(df.filter(col(scoreCol).isNotNull))
     scored.join(broadcast(curriculumStageMap(scored, scoreCol, stages)),
         Seq(scoreCol))
       .withColumn("shuffle_bucket", bucket(col(keyCol), seed))

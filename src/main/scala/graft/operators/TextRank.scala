@@ -75,14 +75,10 @@ object TextRank {
       .withColumn("st", col("tok").isin(stop: _*).cast("int"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("pos"))
-    // feeds cands + stats + scores: localCheckpoint (not persist) because
-    // the frame is consumed lazily by the returned plan — a persist could
-    // never be safely unpersisted and would leak a CacheManager entry per
-    // call (the Dsir.dbcOf discipline)
-    val members = pos.withColumn("g", sum(col("st")).over(w))
+    // feeds cands + stats + scores
+    val members = graft.Seam.cut(pos.withColumn("g", sum(col("st")).over(w))
       .filter(col("st") === 0)
-      .select(col(idCol), col("g"), col("pos"), col("tok"))
-      .localCheckpoint(true)
+      .select(col(idCol), col("g"), col("pos"), col("tok")))
     val cands = members.groupBy(col(idCol), col("g"))
       .agg(array_join(transform(
           sort_array(collect_list(struct(col("pos"), col("tok")))),

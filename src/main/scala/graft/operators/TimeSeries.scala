@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Seam
+
 /** Time-series regularization: project an irregular per-key daily series
   * onto the dense date spine between each key's first and last observation,
   * linearly interpolating interior gaps. The standard pre-processing step
@@ -292,12 +294,10 @@ object TimeSeries {
   def acfDaily(df: DataFrame, group: Column, ts: Column,
                maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"acfDaily: maxLag must be >= 1, got $maxLag")
-    // both lag-join arms consume the daily frame: checkpoint — one
-    // corpus scan (the dual-consumer discipline)
-    val daily = df.filter(ts.isNotNull)
+    // both lag-join arms consume the daily frame: cut — one corpus scan
+    val daily = Seam.cut(df.filter(ts.isNotNull)
       .groupBy(group.as("g"), to_date(ts).as("d"))
-      .agg(count(lit(1)).as("x"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("x")))
     // generators must sit at the top level of a projection — cast after
     val a = daily.withColumn("lag", explode(sequence(lit(1), lit(maxLag))))
       .withColumn("lag", col("lag").cast("long"))
@@ -336,12 +336,10 @@ object TimeSeries {
                      keyA: String, keyB: String,
                      maxLag: Int = 3): DataFrame = {
     require(maxLag >= 1, s"crossCorrDaily: maxLag must be >= 1, got $maxLag")
-    // both series filter the same daily frame: checkpoint — one corpus
-    // scan (the dual-consumer discipline)
-    val daily = df.filter(ts.isNotNull)
+    // both series filter the same daily frame: cut — one corpus scan
+    val daily = Seam.cut(df.filter(ts.isNotNull)
       .groupBy(group.as("g"), to_date(ts).as("d"))
-      .agg(count(lit(1)).as("x"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("x")))
     val a = daily.filter(col("g") === keyA)
       .withColumn("lag", explode(sequence(lit(-maxLag), lit(maxLag))))
       .withColumn("lag", col("lag").cast("long"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Seam
 import graft.functions.Fns
 
 /** Distributed vector aggregation: per-group centroids over an embedding
@@ -72,16 +73,14 @@ object VectorAgg {
       .groupBy(col("dim"))
       .agg(Fns.sumExact(col("val")).as("sm"), count(lit(1)).as("n"))
       .select(col("dim"), (col("sm") / col("n")).as("m"), col("n"))
-    // 1-row (mu array, n): the per-round broadcast state, checkpointed so
-    // every round reuses the materialized means instead of re-aggregating
-    val muArr = mu.groupBy()
+    // 1-row (mu array, n): the per-round broadcast state, cut so every
+    // round reuses the materialized means instead of re-aggregating
+    val muArr = Seam.cut(mu.groupBy()
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
           t => t.getField("m")).as("mu"),
-        max(col("n")).as("n"))
-      .localCheckpoint(true)
-    var vrow = clean.sparkSession.range(1)
-      .select(transform(sequence(lit(1), lit(dim)), _ => lit(0.125)).as("v"))
-      .localCheckpoint(true)
+        max(col("n")).as("n")))
+    var vrow = Seam.cut(clean.sparkSession.range(1)
+      .select(transform(sequence(lit(1), lit(dim)), _ => lit(0.125)).as("v")))
     (0 until iters).foreach { _ =>
       val sFrame = clean.crossJoin(broadcast(vrow))
         .select(col("x"),
@@ -96,23 +95,24 @@ object VectorAgg {
       val perDim = st.select(col("t"), posexplode(col("x")).as(Seq("dim", "val")))
         .groupBy(col("dim"))
         .agg(Fns.sumExact(col("val") * col("t")).as("sxt"))
-      // 64-row checkpoint: w feeds BOTH the norm aggregate and the
-      // normalize projection — without it the corpus-wide perDim
-      // aggregation (and st's dot pass under tbar) would re-execute per
-      // consumer, doubling the round's dominant cost
-      val w = perDim.crossJoin(broadcast(tbar)).crossJoin(broadcast(muArr))
+      // 64-row cut: w feeds BOTH the norm aggregate and the normalize
+      // projection — without it the corpus-wide perDim aggregation (and
+      // st's dot pass under tbar) would re-execute per consumer, doubling
+      // the round's dominant cost
+      val w = Seam.cut(perDim.crossJoin(broadcast(tbar)).crossJoin(broadcast(muArr))
         .select(col("dim"),
           (col("sxt") / col("n") -
-            element_at(col("mu"), col("dim") + 1) * col("tbar")).as("w"))
-        .localCheckpoint(true)
+            element_at(col("mu"), col("dim") + 1) * col("tbar")).as("w")))
       val norm = w.agg(
         sqrt(sum(Fns.dec(col("w") * col("w"))).cast("double")).as("nrm"))
-      vrow = w.crossJoin(broadcast(norm))
+      val prev = vrow
+      vrow = Seam.cut(w.crossJoin(broadcast(norm))
         .select(col("dim"), (col("w") / col("nrm")).as("vd"))
         .groupBy()
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("vd")))),
-          t => t.getField("vd")).as("v"))
-        .localCheckpoint(true)
+          t => t.getField("vd")).as("v")))
+      Seam.release(prev)
+      Seam.release(w)
     }
     clean.unpersist(blocking = false)
     vrow.select(posexplode(col("v")).as(Seq("dim", "loading")))
@@ -149,17 +149,17 @@ object VectorAgg {
     * centroid shift is ≤ `tol` (default 0.0 — an exact fixpoint: identical
     * centroids imply identical assignments imply no further change) or
     * `maxIters` rounds. Same loop discipline as
-    * [[Cluster.connectedComponents]]: `localCheckpoint` per round truncates
-    * the self-referential plan (k rows — the checkpoint is trivially
+    * [[Cluster.connectedComponents]]: a [[graft.Seam]] cut per round
+    * truncates the self-referential plan (k rows — the cut is trivially
     * cheap), and the convergence probe (max squared centroid shift vs the
-    * previous round, via a broadcast k-row self-join) rides the checkpoint
-    * job through `observe()` — one driver round trip per round, never a
-    * separate corpus-sized job. The seed codebook is checkpointed once at
-    * entry: seeds are usually a plan over the corpus (a TakeOrdered
-    * sample), and without the checkpoint both round 1's broadcast and its
-    * shift probe would re-execute that corpus scan. Returns the last
-    * round's `(centroid_id, centroid, n_assigned)`; like the single step,
-    * centroids that win no vectors drop out (cell death — caller reseeds).
+    * previous round, via a broadcast k-row self-join) rides that cut —
+    * one driver round trip per round, never a separate corpus-sized job.
+    * The seed codebook is cut once at entry: seeds are usually a plan over
+    * the corpus (a TakeOrdered sample), and without the cut both round 1's
+    * broadcast and its shift probe would re-execute that corpus scan.
+    * Returns the last round's `(centroid_id, centroid, n_assigned)`; like
+    * the single step, centroids that win no vectors drop out (cell death —
+    * caller reseeds).
     *
     * Determinism: every round's means run in the DECIMAL(18,6) carrier
     * and L2 argmin ties break on centroid_id, so a fixed-`maxIters` run is
@@ -170,8 +170,10 @@ object VectorAgg {
                   vecCol: String = "embedding",
                   materializeLast: Boolean = true): DataFrame = {
     require(maxIters >= 1, "kmeansLloyd: maxIters must be >= 1")
-    var cents = initCents.select(col("centroid_id"), col("c_vec"))
-      .localCheckpoint(true)
+    // the materialized codebook `cents` projects; superseded once the next
+    // round is cut, unless the lazy final round still reads it
+    var centsCut = Seam.cut(initCents.select(col("centroid_id"), col("c_vec")))
+    var cents = centsCut
     var last: DataFrame = null
     var converged = false
     var iters = 0
@@ -193,20 +195,18 @@ object VectorAgg {
         // removes), so the left join hits c_vec for every row and __shift is
         // never NULL; max over zero rows (every cell died / empty corpus) is
         // NULL with n == 0 — nothing left to move, the loop is done
-        val obs = org.apache.spark.sql.Observation()
-        val next = kmeansStep(corpus, cents, idCol, vecCol)
-          .join(broadcast(cents), Seq("centroid_id"), "left")
-          .withColumn("__shift",
-            graft.functions.VectorFns.l2DistSq(col("centroid"), col("c_vec")))
-          .observe(obs, max(col("__shift")).as("shift"), count(lit(1)).as("n"))
-          .select(col("centroid_id"), col("centroid"), col("n_assigned"))
-          .localCheckpoint(true)
-        val m = obs.get
-        val shift = m("shift")
-        converged = (m("n").asInstanceOf[Long] == 0L) ||
-          shift.asInstanceOf[Double] <= tol
+        val (next, m) = Seam.cut(kmeansStep(corpus, cents, idCol, vecCol)
+            .join(broadcast(cents), Seq("centroid_id"), "left")
+            .select(col("centroid_id"), col("centroid"), col("n_assigned"),
+              graft.functions.VectorFns.l2DistSq(col("centroid"), col("c_vec"))
+                .as("__shift")),
+          max(col("__shift")).as("shift"), count(lit(1)).as("n"))
+        converged = (m.getAs[Long]("n") == 0L) ||
+          m.getAs[Double]("shift") <= tol
+        Seam.release(centsCut)
+        centsCut = next
         cents = next.select(col("centroid_id"), col("centroid").as("c_vec"))
-        last = next
+        last = next.drop("__shift")
       }
       iters += 1
     }

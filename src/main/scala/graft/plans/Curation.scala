@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Seam
 import graft.functions.{Fns, HashExprs, TextFns}
 import graft.operators.{Decontaminate, Dedup, Packing, Sampling}
 
@@ -169,23 +170,19 @@ object Curation {
     val nearDeduped = exactDeduped.join(
       nearPairs.select(col("b").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
-    // An extra cut AFTER the lang/quality/score chain: checkpointing
-    // `scored` means the near-dedup anti-join (whose right side is the
+    // An extra cut AFTER the lang/quality/score chain: cutting `scored`
+    // means the near-dedup anti-join (whose right side is the
     // sketch→band→verify pipeline) and the tokenize-scale scoring chain
     // run exactly ONCE — the decontamination gram probe reads the
     // materialized seam instead of re-deriving the survivor frame as a
-    // second branch of the curriculum checkpoint's plan (the r17 shape:
-    // the probe branch re-ran the capped-near anti-join and verify join,
-    // saved only partially by the sketch persists). Value-identical:
+    // second branch of the curriculum cut's plan. Value-identical:
     // contamination is a per-document property, so probing the scored
     // subset equals probing the pre-filter frame after the anti-join
     // (decontamAndStage scaladoc). The curriculum's own seam stays — its
-    // removal was measured SLOWER (the gram probe + bench-gram subtree
-    // then re-runs per consumer inside the timed final plan:
-    // curate_to_shards 5.66 → 6.84 s at 32c) — so the trade is one more
-    // driver round trip for strictly-once stage execution.
-    val scored = scoreSurvivors(nearDeduped, minTokens, minUniq)
-      .localCheckpoint(true)
+    // removal was measured SLOWER (curate_to_shards 5.66 → 6.84 s at 32c)
+    // — so the trade is one more driver round trip for strictly-once
+    // stage execution.
+    val scored = Seam.cut(scoreSurvivors(nearDeduped, minTokens, minUniq))
     (decontamAndStage(scored, scored, benchScrubbed, nGram, stages), report)
   }
 
@@ -198,25 +195,22 @@ object Curation {
   def curateDedupStages(crawl: DataFrame, nearThreshold: Double = 0.6,
                         maxBucketWidth: Int = 1024)
       : (DataFrame, DataFrame, DataFrame) = {
-    // eager checkpoints at the two fan-out seams (the dual-consumer
-    // discipline): the PII scrub's three heavy regexes would otherwise
-    // re-run per consumer (boilerplateLines reads its input three times,
+    // cuts at the two fan-out seams: the PII scrub's three heavy regexes
+    // would otherwise re-run per consumer (boilerplateLines reads its input three times,
     // plus the source join), and the strip+window prefix would re-run
     // for each of the near-dedup subtrees. A production pipeline stages
     // exactly these two frames to storage between stages.
-    val scrubbed = crawl.select(col("doc_id"), col("source"),
-      TextFns.redactPii(col("text")).as("text"))
-      .localCheckpoint(true)
+    val scrubbed = Seam.cut(crawl.select(col("doc_id"), col("source"),
+      TextFns.redactPii(col("text")).as("text")))
     val stripped = Dedup.boilerplateLines(scrubbed, minDocFreq = 10)
       .select(col("doc_id"), col("clean_text").as("text"))
       .join(scrubbed.select(col("doc_id"), col("source")), Seq("doc_id"))
-    val exactDeduped = stripped
+    val exactDeduped = Seam.cut(stripped
       .withColumn("__h", md5(Fns.cleanText(col("text"))))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("__h")).orderBy(col("doc_id"))))
       .filter(col("__rn") === 1)
-      .drop("__h", "__rn")
-      .localCheckpoint(true)
+      .drop("__h", "__rn"))
     // CAPPED near-dedup (r16 verdict #1): the boilerplate-strip stage
     // above reduces but does not eliminate the viral-template hazard
     // (strip needs docFreq >= 10 per LINE; template families survive
@@ -365,20 +359,17 @@ object Curation {
       TextFns.redactPii(col("text")).as("text"))
     val (novel, verdicts) = incrementNoveltyFromArtifacts(batch,
       corpusHashes, corpusBands, corpusShingleHashes, nearThreshold)
-    // The stage 5-7 cut sits AFTER the lang/quality/score chain instead
-    // of before it (r17 cut at the raw novelty seam): the scored seam is
-    // the narrowest frame that still carries everything every downstream
-    // consumer needs (text for the gram probe, score for the histogram,
-    // __ntoks for packing), and checkpointing it means the expensive NEAR
-    // probe (band join + verify) runs exactly once AND the decontamination
-    // gram probe reads materialized rows instead of re-tokenizing the
-    // pre-filter batch as a second plan branch. Value-identical: a doc's
-    // contamination flag depends only on its own text, so probing the
-    // scored subset equals probing the pre-filter batch after the
-    // anti-join (decontamAndStage scaladoc). Same seam count as r17
-    // (scrub, scored, curriculum), fewer rows materialized per seam.
-    val scored = scoreSurvivors(novel, minTokens, minUniq)
-      .localCheckpoint(true)
+    // The stage 5-7 cut sits AFTER the lang/quality/score chain: the
+    // scored seam is the narrowest frame that still carries everything
+    // every downstream consumer needs (text for the gram probe, score for
+    // the histogram, __ntoks for packing), and cutting it means the
+    // expensive NEAR probe (band join + verify) runs exactly once AND the
+    // decontamination gram probe reads materialized rows instead of
+    // re-tokenizing the pre-filter batch as a second plan branch.
+    // Value-identical: a doc's contamination flag depends only on its own
+    // text, so probing the scored subset equals probing the pre-filter
+    // batch after the anti-join (decontamAndStage scaladoc).
+    val scored = Seam.cut(scoreSurvivors(novel, minTokens, minUniq))
     val staged = decontamAndStage(scored, scored, benchScrubbed, nGram,
       stages)
     (shardManifest(staged, budget, nShards), verdicts)
@@ -431,12 +422,11 @@ object Curation {
                                     corpusShingleHashes: DataFrame,
                                     nearThreshold: Double = 0.6)
       : (DataFrame, DataFrame) = {
-    // one eager checkpoint at the fan-out seam: the scrubbed batch feeds
-    // the exact probe, the near probe, the verdict join and the survivor
-    // path — without the cut the three PII regexes re-run per consumer
-    val scrubbed = batch.select(col("doc_id"), col("source"),
-        TextFns.redactPii(col("text")).as("text"))
-      .localCheckpoint(true)
+    // one cut at the fan-out seam: the scrubbed batch feeds the exact
+    // probe, the near probe, the verdict join and the survivor path —
+    // without the cut the three PII regexes re-run per consumer
+    val scrubbed = Seam.cut(batch.select(col("doc_id"), col("source"),
+        TextFns.redactPii(col("text")).as("text")))
     // exact tier: batch hash ∈ corpus hash store (min corpus id reported
     // as the match)
     val exact = scrubbed

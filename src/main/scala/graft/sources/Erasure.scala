@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Mechanics:
   *  1. read JUST the affected partitions (partition pruning — the scan
   *     never touches innocent directories),
-  *  2. filter to survivors and materialize via `localCheckpoint` (a
+  *  2. filter to survivors and materialize them at a [[graft.Seam]] (a
   *     parquet path cannot be overwritten while a live plan still reads
   *     it — the checkpoint breaks the file lineage the same way a Delta
   *     DELETE stages its rewrite),
@@ -39,16 +39,14 @@ object Erasure {
     require(affectedPartitions.nonEmpty, "eraseFromStore: no partitions")
     val affected = spark.read.parquet(store)
       .filter(col(partCol).isin(affectedPartitions: _*))
-    val survivors = affected.filter(keep).localCheckpoint(true)
+    val survivors = graft.Seam.cut(affected.filter(keep))
     val survivingParts = survivors.select(col(partCol)).distinct()
       .collect().map(_.get(0)).toSet
     survivors.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(store)
     // release the staged erasure blocks once the rewrite is committed
-    survivors.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    graft.Seam.release(survivors)
     val emptied = affectedPartitions.filterNot(survivingParts.contains)
     emptied.map { v =>
       val dirName = s"$partCol=$v"

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.Path
+import graft.Seam
 import graft.functions.{Fns, TextExprs, TextFns}
 import graft.operators.Dedup
 
@@ -154,15 +155,14 @@ object NearDupStream {
     // doc artifact (instead of a second store of exploded rows) makes the
     // probe-side explode a narrow op over checkpointed data and drops a
     // store write + join per batch.
-    val surv = Dedup.withBandBucketArray(
+    val surv = Seam.cut(Dedup.withBandBucketArray(
         vsStore.withColumn("__rn", row_number().over(wh))
           .filter(col("__rn") === 1)
           .select(col("doc_id"), col("__h"),
             TextFns.wordShingles(col("text"), shingleLen).as("__sh")),
         "__sh", "buckets", k, bands)
       .withColumn("sh", transform(col("__sh"), x => xxhash64(x)))
-      .drop("__sh")
-      .localCheckpoint(true)
+      .drop("__sh"))
     val banded = surv.select(col("doc_id"),
       posexplode(col("buckets")).as(Seq("band", "bucket")))
     // r18 NOTE — observe() fold measured and REVERTED: riding the "did any
@@ -202,15 +202,14 @@ object NearDupStream {
         .unionByName(surv.select(col("doc_id"), col("sh"))))
     // eager cut: the drop set feeds the kept anti-join AND the verdict
     // join — without it the verify join runs twice
-    val nearDrops = cand
+    val nearDrops = Seam.cut(cand
       .join(aSketch.select(col("doc_id").as("a"), col("sh").as("sh_a")),
         Seq("a"))
       .join(surv.select(col("doc_id").as("b"), col("sh").as("sh_b")),
         Seq("b"))
       .withColumn("jaccard", TextExprs.jaccardSim(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
-      .select(col("b").as("doc_id")).distinct()
-      .localCheckpoint(true)
+      .select(col("b").as("doc_id")).distinct())
     val keptNow = surv.join(nearDrops, Seq("doc_id"), "left_anti")
     keptNow.select(col("doc_id"), col("__h").as("h"), col("sh"),
         col("buckets"))
